@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** DSIR kernel-pair decade harness (r14 verdict item 8): times the
@@ -10,24 +9,15 @@ import org.apache.spark.sql.functions._
   * shape equivalence pinned by DsirSpec) — so SCALING.md's "the
   * production hash is ~2.4× the md5 form" claim stays AUDITED as the
   * code evolves instead of fossilizing as a one-round measurement.
-  * Same session/config discipline as [[Bench]] (min-of-2, noop sink,
-  * checkpoint release between passes); prints one JSON line.
+  * Same session ([[GraftSession]]) and discipline as [[Bench]] (min-of-2,
+  * noop sink, checkpoint release between passes); prints one JSON line.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> sbt "runMain graft.DsirBench"
   */
 object DsirBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     import graft.operators.Dsir
 
     def weights(kernel: Dsir.HashKernel): Unit = {

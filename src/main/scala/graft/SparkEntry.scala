@@ -9,6 +9,7 @@ object SparkEntry {
   /** All registered query modules (one per SURVEY.md §2 capability area). */
   def modules: Seq[QueryModule] = Seq(
     RelationalQueries,
+    GraphQueries,
     ModelQueries,
     DqQueries,
     ProfileQueries,

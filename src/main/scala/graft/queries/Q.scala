@@ -48,3 +48,21 @@ object QueryScratch {
     java.nio.file.Files.createDirectories(
       root.resolve(tag + "_" + seq.incrementAndGet()))
 }
+
+/** Release of the checkpoints a query builder pins. */
+object Checkpoints {
+
+  /** Unpersist, blocking, exactly the RDD that `df.localCheckpoint()`
+    * pinned: the RDD behind `df`'s own `LogicalRDD`. Nothing else is
+    * touched, so builders running concurrently on one SparkContext keep
+    * their checkpoints. Releasing whatever entered the context-wide
+    * persistent-RDD registry since some earlier point instead would also
+    * release every other query's checkpoints made in between.
+    */
+  def unpin(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      r.rdd.unpersist(blocking = true)
+    case p => throw new IllegalArgumentException(
+      s"unpin needs a checkpointed DataFrame, got ${p.nodeName}")
+  }
+}

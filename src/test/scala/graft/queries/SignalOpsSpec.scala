@@ -453,6 +453,24 @@ class SignalOpsSpec extends AnyFunSuite {
     assert(rows(0)._3 == sup.min && rows(0)._4 == sup.max, "round-0 support extremes")
   }
 
+  test("graph_ktruss_capped: rounds 0-2, edges never grow, round 0 within the uncapped peel") {
+    val rows = run("graph_ktruss_capped").map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows.map(_._1).toSeq == Seq(0L, 1L, 2L))
+    assert(rows(0)._2 >= rows(1)._2 && rows(1)._2 >= rows(2)._2)
+    // dropping hub edges can only shrink the round-0 edge set
+    assert(rows(0)._2 <= run("graph_ktruss_peel").head.getLong(1))
+  }
+
+  test("graph_ktruss_cap_sweep: caps 30/60/120, hubs never grow and edges never shrink with the cap") {
+    val rows = run("graph_ktruss_cap_sweep")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(rows.map(_._1).toSeq == Seq(30L, 60L, 120L))
+    rows.toSeq.sliding(2).foreach { case Seq((c1, h1, e1), (c2, h2, e2)) =>
+      assert(h1 >= h2, s"n_hubs grew from cap $c1 to cap $c2")
+      assert(e1 <= e2, s"n_edges shrank from cap $c1 to cap $c2")
+    }
+  }
+
   test("window_seasonal_strength: strengths in [0,1] ppm and Fs consistent with variances") {
     val r = run("window_seasonal_strength").head
     val (vx, vr, fs, ft) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
