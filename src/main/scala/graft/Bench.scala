@@ -60,13 +60,16 @@ object Bench {
       * whichever query draws the resulting GC pauses pays 2-4× — the r12
       * cross-run volatility (ktruss 3.7 / 11.4 / 15.0 s on identical
       * code). Deterministic release after every pass makes each query
-      * start from the same zero-resident state. Nothing else persists
-      * blocks across queries: Tables.load memoizes PLANS (no .cache()),
-      * so the sweep can be unconditional.
+      * start from the same zero-resident state. The model DAG also
+      * caches views read by two or more models (join_ref_dag's
+      * stg_orders); the CacheManager entries are cleared first so none
+      * is left pointing at blocks the sweep has already released.
       */
-    def releaseCheckpoints(): Unit =
+    def releaseCheckpoints(): Unit = {
+      spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
+    }
 
     /** One timed pass; None on failure. Block release runs OUTSIDE the
       * timed window: it is bench hygiene, not query cost.

@@ -35,9 +35,11 @@ object DsirBench {
       Dsir.gumbelResample(scored, 200)
         .write.format("noop").mode("overwrite").save()
     }
-    def release(): Unit =
+    def release(): Unit = {
+      spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
+    }
     def time(f: () => Unit): Double = {
       val t0 = System.nanoTime()
       f()

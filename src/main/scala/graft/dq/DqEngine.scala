@@ -152,8 +152,8 @@ object DqEngine {
 
     // ── uniqueness: one shuffle per key combination ───────────────────
     val uniqueResults = cfg.tests.uniqueness.map { keys =>
-      val dupGroups = df.groupBy(keys.map(col): _*).count()
-        .filter(col("count") > 1).count()
+      val dupGroups = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > 1).count()
       DqResult(testDate, s"uniqueness_${keys.mkString("_")}", "uniqueness",
         if (dupGroups == 0) "PASS" else "FAIL",
         dupGroups, total,

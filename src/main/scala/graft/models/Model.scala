@@ -1,6 +1,8 @@
 package graft.models
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** A transformation model: the engine's equivalent of a dbt model
   * (reference: the SQL files under models/example plus dbt_project.yml:31-42).
@@ -24,7 +26,16 @@ final case class Model(
 
 sealed trait Materialization
 object Materialization {
-  /** dbt default (dbt_project.yml:31-35): a view — no data movement. */
+  /** dbt default (dbt_project.yml:31-35): a view — no data movement.
+    * A temp-view-mode View that two or more models of the same run list
+    * in `deps` is also cached (`spark.catalog.cacheTable`, lazy), so its
+    * plan runs once per run instead of once per reader — and once for
+    * DQ, profiling and custom SQL that read it afterwards by name, which
+    * Spark's CacheManager serves from the same entry. The cache lives as
+    * long as the name is bound: Spark uncaches it when a later run
+    * rebinds the name to a different plan, or when the view is dropped.
+    * Views with one reader and catalog-mode views are never cached.
+    */
   case object View extends Materialization
   /** `materialized='table'` (my_first_dbt_model.sql:10): full rebuild CTAS. */
   case object Table extends Materialization
@@ -38,6 +49,17 @@ object Materialization {
     * anti join keyed on `uniqueKey` (at warehouse scale the same contract
     * maps onto MERGE / dynamic-partition-overwrite of a real table
     * format, so the remainder is not even rewritten).
+    *
+    * A merge writes the accumulated table once: the increment is
+    * persisted for the merge (the anti join and the union both read it),
+    * `existing ⋈anti increment ∪ increment` is written to
+    * `<model>__stage`, and the stage directory replaces the target by a
+    * filesystem delete + rename (a failed rename throws). A crash between
+    * the delete and the rename leaves the merged rows only under
+    * `__stage` — the same window an overwrite of the target has. Spark
+    * refreshes cached plans over a path after it overwrites it, but not
+    * after a rename, so the merge calls `spark.catalog.refreshByPath`
+    * itself; no `__stage` directory outlives a merge.
     */
   final case class Incremental(uniqueKey: Seq[String]) extends Materialization
   /** dbt `materialized='ephemeral'`: never materialized, never
@@ -117,15 +139,24 @@ object ModelDag {
           spark.read.parquet(p)
         case (Materialization.Incremental(keys), Some(dir)) =>
           val p = s"$dir/${m.name}"
-          val target = new java.io.File(p)
-          if (target.exists()) {
-            // merge: new rows win on uniqueKey; stage first because the
-            // merged plan reads the same parquet it will overwrite
-            val existing = spark.read.parquet(p)
-            val merged = existing.join(df, keys, "left_anti").unionByName(df)
-            val stage = s"$dir/${m.name}__stage"
-            merged.write.mode("overwrite").parquet(stage)
-            spark.read.parquet(stage).write.mode("overwrite").parquet(p)
+          val target = new Path(p)
+          val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
+          if (fs.exists(target)) {
+            // merge: new rows win on uniqueKey; staged because the merged
+            // plan reads the parquet it replaces. An increment that is
+            // already cached (a cached view's plan) is not pinned here:
+            // unpersisting it would drop the view's entry.
+            val stage = new Path(s"$dir/${m.name}__stage")
+            val pin = df.storageLevel == StorageLevel.NONE
+            if (pin) df.persist()
+            try {
+              spark.read.parquet(p).join(df, keys, "left_anti").unionByName(df)
+                .write.mode("overwrite").parquet(stage.toString)
+            } finally if (pin) df.unpersist()
+            fs.delete(target, true)
+            if (!fs.rename(stage, target))
+              throw new java.io.IOException(s"could not rename $stage to $target")
+            spark.catalog.refreshByPath(p)
           } else {
             df.write.mode("overwrite").parquet(p)
           }
@@ -206,6 +237,9 @@ object ModelDag {
           () // already a catalog table via saveAsTable — don't shadow it
         case _ =>
           materialized.createOrReplaceTempView(m.name)
+          if (m.materialization == Materialization.View && !catalogViews &&
+              models.count(_.deps.contains(m.name)) >= 2)
+            spark.catalog.cacheTable(m.name)
       }
       m -> spark.table(m.name)
     }
@@ -228,9 +262,12 @@ object ModelDag {
 object SchemaTests {
   import org.apache.spark.sql.functions._
 
-  /** `unique`: values of `col` that appear more than once. */
+  /** `unique`: values of `col` that appear more than once. The group
+    * size is aggregated under a reserved alias, so a key column named
+    * `count` does not collide with it. */
   def unique(df: DataFrame, col: String): DataFrame =
-    df.groupBy(col).count().filter(org.apache.spark.sql.functions.col("count") > 1)
+    df.groupBy(col).agg(count(lit(1)).as("__n"))
+      .filter(org.apache.spark.sql.functions.col("__n") > 1)
 
   /** `not_null`: rows where `col` is null. */
   def notNull(df: DataFrame, col: String): DataFrame =

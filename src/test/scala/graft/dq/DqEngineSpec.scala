@@ -42,6 +42,13 @@ class DqEngineSpec extends AnyFunSuite {
     assert(r("uniqueness_k").status == "FAIL")
   }
 
+  test("uniqueness works on a key column named count") {
+    val df = Seq((1, "a"), (1, "b"), (2, "a")).toDF("count", "v")
+    val r = results(df, DqTests(uniqueness = Seq(Seq("count"), Seq("count", "v"))))
+    assert(r("uniqueness_count").failed_records == 1)
+    assert(r("uniqueness_count_v").failed_records == 0)
+  }
+
   test("format rules: implemented + declared-but-unimplemented set (SURVEY.md §2.6)") {
     val df = Seq(
       ("USD", 1.5, "Acme", "12345678901", "a@b.com", "+56 2 2345 6789"),
